@@ -106,6 +106,10 @@ object Bench {
       b.result()
     } catch { case _: Throwable => Map.empty }
 
+  /** Proper median: averages the two middle elements for an even
+    * sample count — `sorted(size/2)` alone is the upper-of-middle and
+    * biases a reported A/B ratio when reps is even. -1 when empty.
+    */
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val k = s.size

@@ -6,15 +6,7 @@ package graft
   * `runMain graft.Probe <name> <sfDir>`; prints one `[probe]` line.
   */
 object Probe {
-  /** Proper median: averages the two middle elements for an even
-    * sample count — `sorted(size/2)` alone is the upper-of-middle and
-    * biases a reported A/B price ratio when reps is even (ADVICE r17).
-    */
-  private[graft] def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2)
-    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-  }
+  import Bench.median
 
   def main(args: Array[String]): Unit = {
     val what = args(0)

@@ -66,6 +66,61 @@ object Schemas {
     StructField("wind_speed_max", DoubleType),
     StructField("weather_code", DoubleType)))
 
+  /** Every table the pipeline writes, as its files are written: column
+    * order as on disk, a partition column last. [[Warehouse.read]] reads
+    * with these instead of inferring from parquet footers, which costs a
+    * Spark job per read.
+    */
+  val warehouse: Map[String, StructType] = {
+    def struct(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    Map(
+      "staging_weather" -> StructType(staging.fields ++ struct(
+        "temp_range" -> DoubleType,
+        "weather_category" -> StringType,
+        "processed_at" -> TimestampType).fields),
+      "staging_weather_summary" -> struct(
+        "city_name" -> StringType,
+        "avg_temp_max" -> DoubleType,
+        "avg_temp_min" -> DoubleType,
+        "avg_precipitation" -> DoubleType,
+        "max_wind_speed" -> DoubleType,
+        "avg_temp_range" -> DoubleType,
+        "computed_at" -> TimestampType),
+      "agg_monthly_weather" -> struct(
+        "city_name" -> StringType,
+        "year" -> LongType,
+        "month" -> LongType,
+        "avg_temp_max" -> DoubleType,
+        "avg_temp_min" -> DoubleType,
+        "total_precipitation" -> DoubleType,
+        "rainy_days" -> LongType,
+        "max_wind_speed" -> DoubleType),
+      "dim_weather_code" -> struct(
+        "weather_code" -> IntegerType,
+        "description" -> StringType,
+        "category" -> StringType),
+      "dim_city" -> struct(
+        "city_id" -> LongType,
+        "city_name" -> StringType,
+        "latitude" -> DoubleType,
+        "longitude" -> DoubleType,
+        "timezone" -> StringType,
+        "created_at" -> TimestampType,
+        "updated_at" -> TimestampType),
+      "fact_daily_weather" -> struct(
+        "city_name" -> StringType,
+        "temp_max" -> DoubleType,
+        "temp_min" -> DoubleType,
+        "temp_range" -> DoubleType,
+        "precipitation" -> DoubleType,
+        "wind_speed_max" -> DoubleType,
+        "weather_code" -> IntegerType,
+        "weather_category" -> StringType,
+        "loaded_at" -> TimestampType,
+        "date" -> DateType))
+  }
+
   /** The 21-row WMO weather-code dimension seed, verbatim from
     * /root/reference/sql/create_weather_tables.sql:60-82. NOTE: codes 80/81
     * are 'Rain' here but 'Severe' under the CASE chain in Enrich — the two

@@ -14,7 +14,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
 
   def path(table: String): String = s"$root/$table"
 
-  def read(table: String): DataFrame = spark.read.parquet(path(table))
+  /** Reads one of the pipeline's tables with its declared schema
+    * ([[Schemas.warehouse]]), so no footer-inference job runs.
+    */
+  def read(table: String): DataFrame =
+    spark.read.schema(Schemas.warehouse(table)).parquet(path(table))
 
   /** Existence via the Hadoop FileSystem of the warehouse root's scheme —
     * a java.io.File check would always say "no" on hdfs:// or s3:// roots
@@ -51,7 +55,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * slice, and dynamically overwrite ONLY that partition. The fact table
     * is partitioned by `date`, so the daily load reads and rewrites one
     * partition — O(day), never O(history) — and date predicates prune at
-    * scan time. Idempotent: replaying the same ds converges (Q4).
+    * scan time. Idempotent: replaying the same ds converges (Q4). The
+    * first load has nothing to merge and writes the slice directly.
     */
   def upsertFacts(staging: DataFrame, ds: String): Unit = {
     val table = "fact_daily_weather"
@@ -73,27 +78,25 @@ final case class Warehouse(spark: SparkSession, root: String) {
         col("weather_code").cast("int").as("weather_code"),
         lit(null).cast("string").as("weather_category"))
       .withColumn("loaded_at", current_timestamp())
-    val dsDate = java.sql.Date.valueOf(ds)
-    val merged =
-      if (!exists(table)) slice
-      else {
-        // partition pruning limits the read side to the ds partition
-        val factSlice = read(table).filter(col("date") === lit(dsDate))
-        factSlice.join(broadcast(slice.select("city_name", "date")),
-            Seq("city_name", "date"), "left_anti")
-          .unionByName(slice)
-      }
-    // merged reads the partition it overwrites → materialize through a
-    // staging dir first (parquet has no transactional MERGE; SURVEY §7.5)
-    val tmp = path(table + "__tmp")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("date")
-      .parquet(path(table))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true): Unit
+    def overwritePartition(df: DataFrame): Unit =
+      df.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date")
+        .parquet(path(table))
+    if (!exists(table)) overwritePartition(slice)
+    else {
+      // partition pruning limits the read side to the ds partition
+      val factSlice = read(table).filter(col("date") === lit(java.sql.Date.valueOf(ds)))
+      val merged = factSlice.join(broadcast(slice.select("city_name", "date")),
+          Seq("city_name", "date"), "left_anti")
+        .unionByName(slice)
+      // merged reads the partition it overwrites → materialize through a
+      // staging dir first (parquet has no transactional MERGE; SURVEY §7.5)
+      val tmp = new org.apache.hadoop.fs.Path(path(table + "__tmp"))
+      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      overwritePartition(spark.read.schema(merged.schema).parquet(tmp.toString))
+      tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true): Unit
+    }
   }
 
   /** Q6 scale substitute for the reference's Postgres indexes: bucketed
@@ -195,22 +198,20 @@ final case class Warehouse(spark: SparkSession, root: String) {
       .drop("__rn")
     val existed = exists(table)
     val fresh =
-      if (!existed) incoming.withColumn("__base", lit(0L))
-      else {
-        val existing = read(table)
-        // coalesce: an existing-but-empty table has NULL max(city_id)
-        val base = existing.agg(coalesce(max(col("city_id")), lit(0L))).head().getLong(0)
-        incoming.join(existing.select("city_name"), Seq("city_name"), "left_anti")
-          .withColumn("__base", lit(base))
-      }
+      if (!existed) incoming
+      else incoming.join(read(table).select("city_name"), Seq("city_name"), "left_anti")
     if (!fresh.isEmpty) {
+      // coalesce: an existing-but-empty table has NULL max(city_id)
+      val base =
+        if (!existed) 0L
+        else read(table).agg(coalesce(max(col("city_id")), lit(0L))).head().getLong(0)
       // unpartitioned window is deliberate: input is the DISTINCT city
       // list (the reference's 5 configured cities — scale-invariant, not
       // data-proportional), and surrogate ids must be globally dense. The
       // WindowExec single-partition warning is expected and harmless here.
       val w = Window.orderBy(col("city_name"))
       val rows = fresh
-        .withColumn("city_id", col("__base") + row_number().over(w).cast("long"))
+        .withColumn("city_id", lit(base) + row_number().over(w).cast("long"))
         .withColumn("created_at", current_timestamp())
         .withColumn("updated_at", current_timestamp())
         .select("city_id", "city_name", "latitude", "longitude", "timezone",
@@ -221,11 +222,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** Q5 — uniqueness assertion on the fact natural key. */
-  def assertUniqueKeys(): Unit = {
-    val dups = read("fact_daily_weather")
-      .groupBy("city_name", "date").count().filter(col("count") > 1)
-    require(dups.isEmpty, "fact_daily_weather violates UNIQUE(city_name, date)")
-  }
+  def assertUniqueKeys(): Unit = Checks.postLoad(read("fact_daily_weather"), None): Unit
 }
 
 /** The two analytical views

@@ -8,17 +8,14 @@ import graft.etl.Schemas
   * /root/reference/dags/weather_etl_pipeline.py:86-92), which Spark's
   * line-delimited default reader cannot parse — `multiLine=true` is
   * required. Its unit fixtures are compact single-line arrays, which parse
-  * in either mode (SURVEY.md §1.2 gotcha). Both paths are exposed.
+  * in either mode (SURVEY.md §1.2 gotcha), so the multiLine scan reads
+  * both.
   */
 object WeatherJson {
 
   /** Schema-enforced scan of pretty-printed raw extracts (S3). */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.raw).option("multiLine", value = true).json(path)
-
-  /** Schema-enforced scan of compact line-mode files. */
-  def readCompact(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.raw).json(path)
 
   /** Schema-inferred scan (S4 — the reference's test-only path). */
   def readInferred(spark: SparkSession, path: String, multiLine: Boolean = true): DataFrame =

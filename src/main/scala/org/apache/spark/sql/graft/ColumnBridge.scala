@@ -20,8 +20,6 @@ object ColumnBridge {
 object PlanBridge {
   def analyzed(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     org.apache.spark.sql.classic.ClassicConversions.castToImpl(df).queryExecution.analyzed
-  def optimized(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    org.apache.spark.sql.classic.ClassicConversions.castToImpl(df).queryExecution.optimizedPlan
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
